@@ -4314,3 +4314,170 @@ def test_bucket_sets_exclude_null_rows_and_null_probe_guided(
     assert [r.v for r in got] == [6]
     nan_kept = mt.pruned_files_eq(spark, "x", float("nan"))
     assert len(nan_kept) == 1  # only the NaN file's bucket matches
+
+
+def _edit_manifest(path: str, version: int, edit) -> None:
+    """Hand-edit committed manifest ``version`` in place (``edit``
+    mutates the parsed dict), dropping the Hadoop LocalFS checksum
+    sidecar so the edited file does not read as torn."""
+    import json as _json
+
+    mp = os.path.join(path, "_manifests", f"v{version}.json")
+    with open(mp) as fh:
+        m = _json.load(fh)
+    edit(m)
+    with open(mp, "w") as fh:
+        _json.dump(m, fh)
+    crc = os.path.join(path, "_manifests", f".v{version}.json.crc")
+    if os.path.exists(crc):
+        os.unlink(crc)
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs it launched) — the scheduler's next
+    job id only ever grows, so its delta counts every submitted job."""
+    dag = spark._jsparkSession.sparkContext().dagScheduler()
+    j0 = int(dag.nextJobId())
+    out = fn()
+    return out, int(dag.nextJobId()) - j0
+
+
+def test_mor_merge_small_batch_lands_one_file_and_one_dv_part(spark, tmp_path):
+    """A merge-on-read commit is sized from the batch's bytes, not from
+    its upstream partitioning or ``spark.sql.shuffle.partitions``: a
+    small batch spread over 8 partitions, whose keys hit every data
+    file, lands exactly ONE data file and ONE deletion-vector part."""
+    mt = ManifestTable(
+        str(tmp_path / "sz"), stat_cols=("id",), bucket_cols=(("id", 8),)
+    )
+    mt.overwrite(_df(spark, 0, 1000).repartition(4))
+    files0 = set(mt._manifest(spark, mt.current_version(spark))["files"])
+    ups = (
+        spark.range(0, 1100, 7)
+        .select(F.col("id"), (-F.col("id")).alias("v"))
+        .repartition(8)
+    )
+    m1 = mt._manifest(spark, mt.merge(ups, "id", mode="merge-on-read"))
+    assert files0 <= set(m1["files"])
+    assert len(set(m1["files"]) - files0) == 1, m1["files"]
+    parts = {p for e in m1["dvs"].values() for p in e["parts"]}
+    assert len(parts) == 1, m1["dvs"]
+    want = {i: 2 * i for i in range(1000)}
+    want.update({i: -i for i in range(0, 1100, 7)})
+    assert {r.id: r.v for r in mt.read(spark).collect()} == want
+    assert m1["rows"] == len(want)
+
+
+# Jobs an aggregate plus a bucket point lookup launch under DV debt:
+# the aggregate's DV broadcast, scan stage and result; the probe's
+# 1-row hash; the lookup's DV broadcast and result.
+_SNAPSHOT_READ_JOBS = 6
+
+
+def test_snapshot_read_under_dv_debt_launches_no_metadata_jobs(
+    spark, tmp_path
+):
+    """A snapshot read under deletion-vector debt answers its metadata
+    questions from the manifest: DV parts are read under their
+    declared schema (no footer-inference job, no distinct shuffle) and
+    the bucket probe's column type comes from the recorded schema (no
+    snapshot read just to learn a dtype). The job count is pinned so
+    a metadata job creeping back into the read path shows."""
+    mt = ManifestTable(
+        str(tmp_path / "jb"), stat_cols=("id",), bucket_cols=(("id", 8),)
+    )
+    mt.overwrite(_df(spark, 0, 2000).repartition(4))
+    mt.merge(
+        spark.range(0, 2000, 9).select(F.col("id"), F.lit(0).alias("v")),
+        "id",
+        mode="merge-on-read",
+    )
+    mt.delete_where(spark, "id % 10 = 3", mode="merge-on-read")
+    assert len(mt._manifest(spark, mt.current_version(spark))["dvs"]) > 1
+
+    def snapshot_read():
+        agg = mt.read(spark).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
+        ).first()
+        return agg, mt.read_where_eq(spark, "id", 1234).collect()
+
+    (agg, hit), jobs = _jobs_launched(spark, snapshot_read)
+    live = {
+        i: 0 if i % 9 == 0 else 2 * i for i in range(2000) if i % 10 != 3
+    }
+    assert (agg["n"], agg["s"]) == (len(live), sum(live.values()))
+    assert [(r.id, r.v) for r in hit] == [(1234, 2468)]
+    assert jobs <= _SNAPSHOT_READ_JOBS, jobs
+
+
+def test_duplicate_dv_positions_delete_once_and_readers_agree(spark, tmp_path):
+    """DV parts are a union, never deduplicated: a position recorded
+    twice (here: every part duplicated under a second name, as a
+    retried part write could leave it) still deletes its row exactly
+    once. ``read``, a copy-on-write merge and a merge-on-read merge
+    over the same snapshot agree, and row accounting stays exact."""
+    import shutil
+
+    src = str(tmp_path / "dup")
+    mt = ManifestTable(src, stat_cols=("id",))
+    mt.overwrite(_df(spark, 0, 100).repartition(2))
+    v1 = mt.delete_where(spark, "id in (5, 60)", mode="merge-on-read")
+    dvs = mt._manifest(spark, v1)["dvs"]
+    parts = sorted({p for e in dvs.values() for p in e["parts"]})
+    for p in parts:
+        shutil.copyfile(
+            os.path.join(src, "deletes", p),
+            os.path.join(src, "deletes", f"dup-{p}"),
+        )
+
+    def add_dup_parts(m):
+        for e in m["dvs"].values():
+            e["parts"] = e["parts"] + [f"dup-{p}" for p in e["parts"]]
+
+    _edit_manifest(src, v1, add_dup_parts)
+    live = {i: 2 * i for i in range(100) if i not in (5, 60)}
+    assert {r.id: r.v for r in mt.read(spark).collect()} == live
+    assert mt.read(spark).count() == 98
+
+    ups = spark.createDataFrame(
+        [(6, -6), (61, -61), (500, -500)], "id long, v long"
+    )
+    want = {**live, 6: -6, 61: -61, 500: -500}
+    for mode in ("copy-on-write", "merge-on-read"):
+        dst = str(tmp_path / mode)
+        shutil.copytree(src, dst)
+        t = ManifestTable(dst, stat_cols=("id",))
+        v = t.merge(ups, "id", mode=mode)
+        assert {r.id: r.v for r in t.read(spark).collect()} == want, mode
+        assert t._manifest(spark, v)["rows"] == len(want), mode
+
+
+def test_bucket_of_legacy_manifest_without_schema_types_from_files(
+    spark, tmp_path
+):
+    """``bucket_of`` takes the probe column's type from the recorded
+    schema; a hand-made legacy manifest with no ``schema`` entry falls
+    back to the data files' type. Either way an int probe on a double
+    column hashes the DOUBLE bytes the commit side recorded (123 hashes
+    to bucket 3 as a double and 1 as a bigint)."""
+    path = str(tmp_path / "lg")
+    mt = ManifestTable(path, bucket_cols=(("x", 8),))
+    mt.overwrite(
+        spark.range(0, 200).selectExpr("cast(id as double) x", "id v")
+        .coalesce(1)
+    )
+    v = mt.current_version(spark)
+    want = (
+        spark.range(1)
+        .select(F.pmod(F.xxhash64(F.lit(123.0)), F.lit(8)))
+        .first()[0]
+    )
+    assert mt.bucket_of(spark, "x", 123) == want
+
+    _edit_manifest(path, v, lambda m: m.pop("schema"))
+    assert "schema" not in mt._manifest(spark, v)
+    assert mt.bucket_of(spark, "x", 123) == want
+    with pytest.raises(ValueError, match="incompatible"):
+        mt.bucket_of(spark, "x", "123")
+    got = mt.read_where_eq(spark, "x", 123).collect()
+    assert [(r.x, r.v) for r in got] == [(123.0, 123)]

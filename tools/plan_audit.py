@@ -466,6 +466,12 @@ EXPECTATIONS: dict[str, list[tuple[str, str]]] = {
         ("DV positions applied as a broadcast anti-join",
          r"BroadcastHashJoin.*LeftAnti"),
         ("DV subtract never shuffles the scan side", "!SortMergeJoin"),
+        # DV parts are read under their declared schema and never
+        # deduplicated (a duplicate position is harmless under the
+        # anti-join): the broadcast side is scan -> filter/project only
+        ("DV build side has no aggregate or Exchange (no distinct)",
+         r"!\+- BroadcastExchange \(\d+\)\n(?:[ :|]*\+- (?:Project|Filter)"
+         r"[^\n]*\n)*[ :|]*\+- (?:HashAggregate|Exchange)"),
     ],
     "q21_waiting_suppliers": [
         ("status filter pushed to the orders scan",

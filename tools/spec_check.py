@@ -89,6 +89,11 @@ INVARIANTS: dict[str, tuple[str, list[str]]] = {
         ["test_mor_deletes_survive_rewrites_and_vacuum",
          "test_dv_read_preserves_user_column_named_f"],
     ),
+    "dv-declared-schema": (
+        "DV parts have the fixed schema `_f string, _pos bigint`",
+        ["test_duplicate_dv_positions_delete_once_and_readers_agree",
+         "test_snapshot_read_under_dv_debt_launches_no_metadata_jobs"],
+    ),
     "rewrite-materializes-dvs": (
         "reads it DV-applied and drops its entry",
         ["test_cow_rewrite_on_dv_table", "test_mor_deletes_survive_rewrites_and_vacuum"],

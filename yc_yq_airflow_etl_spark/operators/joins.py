@@ -180,38 +180,41 @@ def exclusion_diff_count(
     tagged union + groupBy over the key computes per-key multiset
     sides in a single exchange: keys present on only one side
     contribute that side's multiplicity. NULL-keyed rows never match
-    anything in SQL join semantics, so they are counted per-side
-    before the grouped pass (grouping would wrongly unify them).
+    anything in SQL join semantics, so the grouping key carries a
+    ``_nk`` (any key NULL) flag and an ``_nk`` group contributes BOTH
+    sides' rows — the NULL rows are counted in the same pass instead
+    of by two extra scans of the inputs.
 
     At 100 TB this is the difference between one wide shuffle of the
     union and two join shuffles — and partial aggregation compresses
     each map task's output to its distinct keys before the exchange.
     """
     keys = list(on)
-    _reserve("exclusion_diff_count", left.select(*keys), "_side", "_nl", "_nr")
+    _reserve(
+        "exclusion_diff_count", left.select(*keys),
+        "_side", "_nk", "_nl", "_nr",
+    )
     null_key = None
     for k in keys:
         c = F.col(k).isNull()
         null_key = c if null_key is None else (null_key | c)
 
-    l = left.select(*keys)
-    r = right.select(*keys)
-    null_count = l.filter(null_key).count() + r.filter(null_key).count()
-
-    u = l.filter(~null_key).withColumn("_side", F.lit(0)).unionByName(
-        r.filter(~null_key).withColumn("_side", F.lit(1))
+    u = left.select(*keys).withColumn("_side", F.lit(0)).unionByName(
+        right.select(*keys).withColumn("_side", F.lit(1))
     )
-    per_key = u.groupBy(*keys).agg(
+    per_key = u.groupBy(null_key.alias("_nk"), *keys).agg(
         F.sum(F.when(F.col("_side") == 0, 1).otherwise(0)).alias("_nl"),
         F.sum(F.when(F.col("_side") == 1, 1).otherwise(0)).alias("_nr"),
     )
+    # a non-NULL key present on one side only contributes that side's
+    # multiplicity (the other side is 0); NULL-keyed rows always count
+    one_sided = F.col("_nk") | (F.col("_nl") == 0) | (F.col("_nr") == 0)
     row = per_key.select(
         F.sum(
-            F.when(F.col("_nr") == 0, F.col("_nl")).otherwise(0)
-            + F.when(F.col("_nl") == 0, F.col("_nr")).otherwise(0)
+            F.when(one_sided, F.col("_nl") + F.col("_nr")).otherwise(0)
         ).alias("d")
     ).first()
-    return int(row[0] or 0) + null_count
+    return int(row[0] or 0)
 
 
 def range_join(

@@ -75,6 +75,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
+# the fixed schema of a deletion-vector part under deletes/
+_DV_SCHEMA = "_f string, _pos bigint"
 
 
 def _nullable_type(dt):
@@ -794,20 +796,20 @@ class ManifestTable:
         hashing. One 1-row local job.
 
         The canonical type comes from the COLUMN's dtype in the
-        snapshot schema, not from the probe's Python type: an int
-        probe against a double column must hash the double bytes the
-        commit side recorded (Iceberg promotes the literal to the
-        column type before hashing for the same reason). An
-        incompatible probe (string vs numeric, or a fractional float
-        against an integer column — a predicate that can match no row)
-        raises rather than silently pruning wrong."""
+        snapshot schema (see :meth:`_column_type`), not from the
+        probe's Python type: an int probe against a double column must
+        hash the double bytes the commit side recorded (Iceberg
+        promotes the literal to the column type before hashing for the
+        same reason). An incompatible probe (string vs numeric, or a
+        fractional float against an integer column — a predicate that
+        can match no row) raises rather than silently pruning wrong."""
         from pyspark.sql import functions as F
 
         n = dict(self.bucket_cols)[col]
         v = self.current_version(spark) if version is None else version
         if v is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        dtype = dict(self.read(spark, version=v).dtypes).get(col)
+        dtype = self._column_type(spark, self._manifest(spark, v), col)
         canon = _bucket_canon_type(dtype, col)
         probe_canon = _bucket_canon_type_of_value(value)
         if (canon == "string") != (probe_canon == "string"):
@@ -831,6 +833,23 @@ class ManifestTable:
             .first()
         )
         return int(row["b"])
+
+    def _column_type(
+        self, spark: SparkSession, m: dict, col: str
+    ) -> str | None:
+        """``col``'s type name as ``DataFrame.dtypes`` spells it, read
+        from snapshot ``m``'s recorded schema — the same schema every
+        snapshot read declares, so no Spark job is needed. Legacy
+        manifests without a schema record fall back to the type of a
+        snapshot read. None when the column is absent."""
+        sch = m.get("schema")
+        if sch is None:
+            return dict(self._scan(spark, m, m["files"]).dtypes).get(col)
+        types = {
+            f.name: f.dataType.simpleString()
+            for f in _schema_from_json(sch).fields
+        }
+        return types.get(col)
 
     def pruned_files_eq(
         self,
@@ -896,14 +915,7 @@ class ManifestTable:
         # deletion vectors — re-resolving here would let a concurrent
         # commit pair v1 files with v2 DVs (resurrecting deleted rows)
         m = self._manifest(spark, v)
-        df = self._strip_dvs(
-            self._reader_for(spark, m).parquet(
-                *[f"{self.path}/data/{f}" for f in files]
-            ),
-            self._dv_frame(spark, m, files),
-            self._dv_rows(m, files),
-        )
-        return df.filter(F.col(col).isNull())
+        return self._scan(spark, m, files).filter(F.col(col).isNull())
 
     def read_where_eq(self, spark: SparkSession, col: str, value) -> DataFrame:
         """Equality read through bucket metadata: scan ONLY the files
@@ -920,14 +932,7 @@ class ManifestTable:
             return self.read(spark, version=v).filter(F.lit(False))
         # file list and DVs from ONE snapshot (see read_where_null)
         m = self._manifest(spark, v)
-        df = self._strip_dvs(
-            self._reader_for(spark, m).parquet(
-                *[f"{self.path}/data/{f}" for f in files]
-            ),
-            self._dv_frame(spark, m, files),
-            self._dv_rows(m, files),
-        )
-        return df.filter(F.col(col) == value)
+        return self._scan(spark, m, files).filter(F.col(col) == value)
 
     def _publish(
         self,
@@ -1776,11 +1781,21 @@ class ManifestTable:
         if v is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
         manifest = self._manifest(spark, v)
-        df = self._reader_for(spark, manifest).parquet(
-            *[f"{self.path}/data/{f}" for f in manifest["files"]]
-        )
+        return self._scan(spark, manifest, manifest["files"])
+
+    def _scan(
+        self, spark: SparkSession, m: dict, files: list[str]
+    ) -> DataFrame:
+        """Snapshot ``m``'s live rows in ``files``: a metadata-resolved
+        scan of exactly those files minus their deletion vectors — the
+        one place DV application is defined for every reader and
+        rewrite engine."""
         return self._strip_dvs(
-            df, self._dv_frame(spark, manifest), self._dv_rows(manifest)
+            self._reader_for(spark, m).parquet(
+                *[f"{self.path}/data/{f}" for f in files]
+            ),
+            self._dv_frame(spark, m, files),
+            self._dv_rows(m, files),
         )
 
     # -- deletion vectors (merge-on-read DELETE) -------------------------
@@ -1804,7 +1819,13 @@ class ManifestTable:
         relevant to ``files`` (all files when None); None when there
         are no deletes to apply. Parts may conservatively hold
         positions of other files — the anti-join key includes the file
-        name, so extra pairs match nothing."""
+        name, so extra pairs match nothing.
+
+        DV parts are internal files with a fixed schema, so it is
+        DECLARED: no footer-inference job per read. The union is not
+        deduplicated — every consumer is a left-anti join, where a
+        position recorded twice deletes its row exactly once, so a
+        distinct would only add a shuffle to every DV-applied read."""
         dvs = manifest.get("dvs", {})
         if files is not None:
             want = set(files)
@@ -1812,15 +1833,12 @@ class ManifestTable:
         parts = sorted({p for e in dvs.values() for p in e["parts"]})
         if not parts:
             return None
-        from pyspark.sql import functions as F
-
         return (
             # forced off like _reader_for: a skipped missing DV part
             # silently RESURRECTS deleted rows
             spark.read.option("ignoreMissingFiles", "false")
+            .schema(_DV_SCHEMA)
             .parquet(*[f"{self.path}/deletes/{p}" for p in parts])
-            .select(F.col("_f"), F.col("_pos"))
-            .distinct()
         )
 
     # Above this many dead rows the DV frame stops being broadcast:
@@ -2281,14 +2299,9 @@ class ManifestTable:
             return self.read(spark, version=v).filter(F.lit(False))
         # file list and DVs from ONE snapshot (see read_where_null)
         m = self._manifest(spark, v)
-        df = self._strip_dvs(
-            self._reader_for(spark, m).parquet(
-                *[f"{self.path}/data/{f}" for f in files]
-            ),
-            self._dv_frame(spark, m, files),
-            self._dv_rows(m, files),
+        return self._scan(spark, m, files).filter(
+            (F.col(col) >= lo) & (F.col(col) <= hi)
         )
-        return df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
 
     def merge(
         self,
@@ -2474,8 +2487,7 @@ class ManifestTable:
             # matches no file only because the `hit` predicate below
             # requires _k IS NOT NULL (r16: the commit side also stops
             # recording the phantom NULL bucket in file sets).
-            dtype = dict(self.read(spark, version=base).dtypes).get(key)
-            canon = _bucket_canon_type(dtype, key)
+            canon = _bucket_canon_type(self._column_type(spark, m, key), key)
             keyed = keyed.withColumn(
                 "_b",
                 F.pmod(F.xxhash64(F.col("_k").cast(canon)), F.lit(bucket_n)),
@@ -2610,14 +2622,7 @@ class ManifestTable:
             # mixed-schema touched set read plain would adopt one
             # file's columns by listing order and silently drop the
             # evolved column from the rewrite
-            touched_reader = self._reader_for(spark, m)
-            old_rows = self._strip_dvs(
-                touched_reader.parquet(
-                    *[f"{self.path}/data/{f}" for f in sorted(touched)]
-                ),
-                self._dv_frame(spark, m, sorted(touched)),
-                self._dv_rows(m, sorted(touched)),
-            )
+            old_rows = self._scan(spark, m, sorted(touched))
             carried_rows = old_rows.join(drop_keys, on=key, how="left_anti")
             # evolved snapshots tolerate updates written against the
             # pre-evolution schema (absent columns read as NULL, the
@@ -2732,7 +2737,13 @@ class ManifestTable:
         is a semi-join of the candidate scan against the batch's keys
         (left to the planner: the batch side is micro-batch-sized in
         the CDC loop and broadcasts; AQE picks a shuffle join when it
-        is not)."""
+        is not).
+
+        Both writes go through AQE's rebalance, so the commit's file
+        count follows the batch's bytes (advisory partition size), not
+        the upstream partitioning: a cached batch plan cannot be
+        coalesced, and ``spark.sql.shuffle.partitions`` files per
+        micro-batch is pure small-file debt for every later scan."""
         from pyspark.sql import functions as F
 
         # schema already validated by merge() (unknown columns raise;
@@ -2769,7 +2780,7 @@ class ManifestTable:
                     dead.select(
                         F.col("__dv_f").alias("_f"),
                         F.col("__dv_pos").alias("_pos"),
-                    ),
+                    ).hint("rebalance"),
                     subdir="deletes",
                 )
         n_dead = sum(per_file.values())
@@ -2783,7 +2794,7 @@ class ManifestTable:
         # whatever landed by then must not outlive the failure
         with self._staged_cleanup(spark, new_files, parts):
             if n_updates:
-                staged, _, _n = self._write_files(updates)
+                staged, _, _n = self._write_files(updates.hint("rebalance"))
                 new_files.extend(staged)  # extend: cleanup sees them
                 new_stats = self._file_stats(spark, new_files)
             new_dvs = {f: dict(e) for f, e in m.get("dvs", {}).items()}
@@ -3253,13 +3264,7 @@ class ManifestTable:
             return base
         untouched = [f for f in m["files"] if f not in touched]
 
-        old_rows = self._strip_dvs(
-            self._reader_for(spark, m).parquet(
-                *[f"{self.path}/data/{f}" for f in sorted(touched)]
-            ),
-            self._dv_frame(spark, m, sorted(touched)),
-            self._dv_rows(m, sorted(touched)),
-        )
+        old_rows = self._scan(spark, m, sorted(touched))
         touched_before = old_rows.count()
         matched = old_rows.filter(F.coalesce(pred, F.lit(False))).count()
         new_files, _, wrote_rows = self._write_files(
